@@ -6,8 +6,8 @@ Four tiers, all built from public DataFrame APIs:
    deterministic min-id representative. One shuffle on the content hash.
 2. **N-gram Jaccard (exact near-dup)** — inverted-index self-join on
    distinct k-gram shingles -> per-pair intersection counts -> Jaccard
-   filter. SQL-expressible, so it doubles as the DuckDB-oracle ground
-   truth for the probabilistic tiers.
+   filter. SQL-expressible, and the recall reference for the
+   probabilistic tiers.
 3. **MinHash + LSH (scalable near-dup)** — per-doc minhash signature
    (xxhash64 under NUM_HASHES seeds), banded into buckets; only docs
    sharing a band bucket become candidate pairs, then candidates are
@@ -15,6 +15,10 @@ Four tiers, all built from public DataFrame APIs:
    bucket collisions — never all pairs.
 4. **SimHash** — 64-bit sign-aggregated token-hash fingerprint; near-dups
    are pairs within Hamming distance d, blocked on the top 16 bits.
+
+Tiers 3 and 4 hash with Spark's ``xxhash64``; their DuckDB oracles
+(queries/xxh64_oracles.py) reproduce it bit-for-bit in SQL, so the
+oracle checks these production tiers directly.
 
 Design notes for 1000-executor scale:
 - every self-join is preceded by an explode on a key that distributes
@@ -359,117 +363,6 @@ def minhash_lsh_pairs(
     )
 
 
-def minhash_lsh_pairs_md5(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    *,
-    k: int = 3,
-    threshold: float = 0.8,
-) -> DataFrame:
-    """MinHash-LSH near-dup with a CROSS-ENGINE hash family — the fully
-    DuckDB-oracled twin of ``minhash_lsh_pairs``.
-
-    The xxhash64 tier is faster but engine-specific (seeds differ between
-    engines), so it can only be rows-only + pytest-pinned. This tier
-    derives the NUM_HASHES hash family from md5 — the one string hash
-    both engines compute identically — via Kirsch-Mitzenmacher double
-    hashing: h1/h2 are the first two 32-bit words of md5(shingle) and
-    ``h_i = (h1 + i*h2) mod 2^32`` (Kirsch & Mitzenmacher, ESA 2006:
-    two hashes generate a family with the same asymptotics). One md5 per
-    distinct shingle, then NUM_HASHES cheap integer ops — same cost
-    structure as the xxhash64 tier (one string hash + cheap rehashes).
-    ``(h1 + 31*h2) < 2^37`` so the arithmetic is overflow-exact in both
-    engines' 64-bit integers.
-
-    Banding/verification mirror ``minhash_lsh_pairs``: BANDS buckets per
-    doc (bucket = the band's minima joined as a string — identical
-    decimal rendering on both engines), candidates from bucket
-    collisions only, exact-Jaccard verification over the string shingle
-    sets. On corpora where the S-curve saturates (J >= threshold =>
-    P(candidate) ~ 1), both tiers return the same verified pair set —
-    pinned in tests/test_llm_ops.py.
-    """
-    sh = shingles(tokens(F.col(text_col)), k)
-    # The (doc, sh) relation is persisted: it feeds the occurrence explode
-    # AND the verification joins (like the signature persist in
-    # ``minhash_lsh_pairs``).
-    base = (
-        df.select(F.col(id_col).alias("doc"), sh.alias("sh"))
-        .filter(F.size("sh") > 0)
-        .persist()
-    )
-    # DISTINCT-SHINGLE-SPACE rewrite (round 6; the same trade that won 4x
-    # on fuzzy linkage): md5+conv is the expensive per-shingle step, and
-    # template-duplicated corpora — the whole reason a dedup pass exists —
-    # repeat shingles heavily across docs (sf0.1 fixture: 260k occurrences
-    # over 27k distinct). Hash once per DISTINCT shingle, equi-join the
-    # (h1, h2) pair back to the occurrence stream, and fold the
-    # Kirsch-Mitzenmacher family as NUM_HASHES map-side-combined min
-    # aggregates per doc. Measured 3.8 -> 2.1 s at sf0.1 with an
-    # identical verified pair set; the earlier per-occurrence expression
-    # form also had to persist mid-pipeline anyway (seed lambdas
-    # re-inline their input: 21-27 s unpersisted), so this replaces that
-    # materialization, not a zero-cost pipeline. An earlier round's
-    # history note: staged projections alone do NOT survive Catalyst's
-    # collapsing across lambda boundaries.
-    occ = base.select("doc", F.explode("sh").alias("s"))
-    digest = F.md5(F.col("s"))
-    dist = occ.select("s").distinct().select(
-        "s",
-        F.conv(F.substring(digest, 1, 8), 16, 10).cast("long").alias("h1"),
-        F.conv(F.substring(digest, 9, 8), 16, 10).cast("long").alias("h2"),
-    )
-    mod = F.lit(4294967296)
-    sigs = (
-        occ.join(dist, "s")
-        .groupBy("doc")
-        .agg(
-            *[
-                F.min((F.col("h1") + F.lit(i) * F.col("h2")) % mod).alias(f"_m{i}")
-                for i in range(NUM_HASHES)
-            ]
-        )
-        .select("doc", F.array(*[f"_m{i}" for i in range(NUM_HASHES)]).alias("sig"))
-    )
-    band_cols = [
-        F.struct(
-            F.lit(b).alias("band"),
-            F.concat_ws(
-                ":",
-                *[F.element_at("sig", b * ROWS_PER_BAND + r + 1) for r in range(ROWS_PER_BAND)],
-            ).alias("bucket"),
-        )
-        for b in range(BANDS)
-    ]
-    banded = sigs.select("doc", F.explode(F.array(*band_cols)).alias("bb")).select(
-        "doc", F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket")
-    )
-    a, b = banded.alias("a"), banded.alias("b")
-    candidates = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col("a.doc") < F.col("b.doc")),
-        )
-        .select(F.col("a.doc").alias("doc_a"), F.col("b.doc").alias("doc_b"))
-        .dropDuplicates(["doc_a", "doc_b"])
-    )
-    sets = base.select("doc", "sh")
-    pairs = (
-        candidates.join(sets.withColumnRenamed("doc", "doc_a").withColumnRenamed("sh", "sh_a"), "doc_a")
-        .join(sets.withColumnRenamed("doc", "doc_b").withColumnRenamed("sh", "sh_b"), "doc_b")
-    )
-    inter = F.size(F.array_intersect("sh_a", "sh_b"))
-    union = F.size("sh_a") + F.size("sh_b") - inter
-    return (
-        pairs.withColumn("jaccard", round_to(inter / union, 4))
-        .filter(F.col("jaccard") >= threshold)
-        .select("doc_a", "doc_b", "jaccard")
-    )
-
-
 def connected_components(
     edges: DataFrame,
     ids: DataFrame,
@@ -587,55 +480,6 @@ def simhash_pairs(
     # and must not run twice.
     sh = simhash(df, id_col, text_col).withColumn(
         "block", F.shiftright("simhash", 48)
-    ).persist()
-    a, b = sh.alias("a"), sh.alias("b")
-    xor = F.col("a.simhash").bitwiseXOR(F.col("b.simhash"))
-    return (
-        a.join(b, (F.col("a.block") == F.col("b.block")) & (F.col("a.doc") < F.col("b.doc")))
-        .withColumn("hamming", F.bit_count(xor))
-        .filter(F.col("hamming") <= max_hamming)
-        .select(F.col("a.doc").alias("doc_a"), F.col("b.doc").alias("doc_b"), "hamming")
-    )
-
-
-def simhash_md5(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """60-bit SimHash with a CROSS-ENGINE token hash — the oracled twin of
-    ``simhash`` (xxhash64 is engine-specific, so that tier is rows-only).
-
-    The token hash is the first 15 hex digits of md5 parsed as an integer
-    (60 bits, always positive — the same cross-engine hash the winnowing
-    fingerprint uses, queries/text_extra.py). Same single-pass fold as
-    the xxhash64 tier; the fold maps token-hash bit i to fingerprint bit
-    (59 - i), which the DuckDB oracle mirrors exactly.
-    """
-    fingerprint = F.expr(
-        f"""
-        aggregate(
-          transform(
-            aggregate(
-              transform(split({text_col}, ' '),
-                        t -> CAST(conv(substr(md5(t), 1, 15), 16, 10) AS BIGINT)),
-              array_repeat(0, 60),
-              (acc, h) -> zip_with(
-                acc,
-                transform(sequence(0, 59), i ->
-                  CASE WHEN (shiftright(h, CAST(i AS INT)) & 1L) = 1L THEN 1 ELSE -1 END),
-                (a, b) -> a + b)),
-            c -> CASE WHEN c > 0 THEN 1L ELSE 0L END),
-          0L, (acc, b) -> shiftleft(acc, 1) | b)
-        """
-    )
-    return df.select(F.col(id_col).alias("doc"), fingerprint.alias("simhash"))
-
-
-def simhash_pairs_md5(
-    df: DataFrame, id_col: str, text_col: str, *, max_hamming: int = 6
-) -> DataFrame:
-    """Cross-engine simhash near-dup pairs: same top-16-bit blocking and
-    Hamming filter as ``simhash_pairs``, over the md5-derived 60-bit
-    fingerprints (block = bits 59..44)."""
-    sh = simhash_md5(df, id_col, text_col).withColumn(
-        "block", F.shiftright("simhash", 44)
     ).persist()
     a, b = sh.alias("a"), sh.alias("b")
     xor = F.col("a.simhash").bitwiseXOR(F.col("b.simhash"))

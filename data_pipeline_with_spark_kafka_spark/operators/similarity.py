@@ -113,10 +113,10 @@ def make_planes_md5(dim: int, n_planes: int, prefix: str = "hp") -> np.ndarray:
     """CROSS-ENGINE Rademacher hyperplanes: sign(p, d) from the parity of
     the first hex digit of md5('{prefix}{p}:{d}') — the same derivation
     DuckDB reproduces in SQL (substr(md5(...), 1, 1) parity), which makes
-    the whole LSH pipeline oracle-able. Hash-derived Rademacher entries
-    have the same JL/angle-preservation guarantees as seeded-RNG ones.
-    ``prefix`` namespaces independent families (LSH buckets vs the JL
-    projection in queries/llm_lm_extra.py) so they never share signs."""
+    a projection over them oracle-able (the JL projection in
+    queries/llm_lm_extra.py). Hash-derived Rademacher entries have the
+    same JL/angle-preservation guarantees as seeded-RNG ones. ``prefix``
+    namespaces independent families so they never share signs."""
     import hashlib
 
     return np.array(
@@ -143,14 +143,11 @@ def lsh_topk(
     dim: int = 64,
     seed: int = 42,
     probe_radius: int = 1,
-    planes: np.ndarray | None = None,
 ) -> DataFrame:
     """Approximate top-k: exact rerank restricted to buckets within
     ``probe_radius`` sign-bit flips of the query's bucket (multi-probe LSH —
-    recall/candidate tradeoff is the probe radius, not a rebuild).
-    ``planes`` overrides the seeded-RNG family (e.g. ``make_planes_md5``
-    for the cross-engine-oracled variant)."""
-    planes = planes if planes is not None else make_planes(dim, n_planes, seed)
+    recall/candidate tradeoff is the probe radius, not a rebuild)."""
+    planes = make_planes(dim, n_planes, seed)
     # Norms hoisted into the projections (cosine_pre contract above):
     # the fact-side cast + norm run once per row instead of per join
     # match, the query norm once instead of per row.

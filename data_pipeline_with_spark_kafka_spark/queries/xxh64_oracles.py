@@ -1,10 +1,9 @@
 """DuckDB oracles for the xxhash64 *production* dedup tiers.
 
 These assemble the compiled-XXH64 CTE blocks (``xxh64_sql``) into full
-oracle statements for ``llm_dedup_simhash`` and ``llm_dedup_minhash_lsh``
-— the queries that were previously rows-only with fully-oracled md5
-twins. Structure mirrors the twins (SIMHASH_MD5_ORACLE /
-MINHASH_MD5_ORACLE in queries/llm.py); only the hash family changes:
+oracle statements for ``llm_dedup_simhash`` and ``llm_dedup_minhash_lsh``.
+Each replays the Spark pipeline stage by stage; the hash family is
+Spark's own:
 
 - token/shingle hash: XXH64 over UTF-8 bytes, seed 42
   (``string_hash_ctes`` — recursive stripe loop + closed-form tail);

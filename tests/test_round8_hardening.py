@@ -1,12 +1,13 @@
 """Round-8 hardening tests for the advice findings: erase-CLI crash
 recovery + zero-match rewrite skip, two-phase-swap leftover repair, and
-attribution-stream duration-spec validation."""
+stream-operator duration-spec validation."""
 
 from __future__ import annotations
 
 import os
 
 import pytest
+from pyspark.sql import functions as F
 
 from tests.test_round7_queries import _write_erasure_universe
 
@@ -142,6 +143,19 @@ def test_duration_ms_invalid_specs_raise_descriptive(spec, msg):
 
     with pytest.raises(ValueError, match=msg):
         _duration_ms(spec)
+
+
+@pytest.mark.parametrize("window", ["1 fortnight", "10minutes"])
+def test_trending_items_rejects_invalid_window(spark, window):
+    """trending_items parses its window with the same validated parser as
+    the other stream operators, before any plan is built."""
+    from data_pipeline_with_spark_kafka_spark.streaming.trending import trending_items
+
+    events = spark.createDataFrame(
+        [("a", "2024-01-01 00:00:00")], "item string, ts string"
+    ).select("item", F.to_timestamp("ts").alias("ts"))
+    with pytest.raises(ValueError, match="invalid duration"):
+        trending_items(events, item_col="item", time_col="ts", window=window)
 
 
 def test_dow_group_key_exemption_is_query_scoped():

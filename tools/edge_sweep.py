@@ -100,7 +100,7 @@ EXPECTED_DIVERGENCES: dict[tuple[str, str], str] = {
         for q in (
             "emb_pca_project", "emb_pca_explained_variance",
             "llm_sim_topk_bruteforce", "llm_knn_join_exact",
-            "llm_sim_topk_lsh_md5", "llm_sim_topk_lsh",
+            "llm_sim_topk_lsh",
             "llm_dedup_embedding_cosine_fast",
             "llm_dedup_embedding_cosine_ivf", "llm_semdedup_prune",
             "llm_emb_random_projection", "llm_hybrid_rrf",
