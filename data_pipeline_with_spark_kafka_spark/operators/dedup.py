@@ -37,7 +37,7 @@ bench.py does, or unpersist via the plan's cached ancestors).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from data_pipeline_with_spark_kafka_spark.operators.text import (
@@ -378,66 +378,82 @@ def connected_components(
 
     Iterative min-label propagation, pure DataFrame ops: every doc starts
     labeled with its own id; each round every doc takes the min of its own
-    label and its neighbors' labels; converged when the global label sum
-    stops falling (labels only ever decrease, so the sum is a convergence
-    metric that costs one aggregate — no change-detection join). Rounds
-    needed = graph diameter, which for dedup graphs is small (duplicate
-    groups are near-cliques). Each round is one shuffle join + one
-    aggregate; generations are persisted eagerly and the previous one
-    unpersisted (same discipline as kmeans).
+    label and its neighbors' labels; converged after the first round that
+    changes no label. Rounds needed are at most the graph's diameter + 1,
+    which for dedup graphs is small (duplicate groups are near-cliques).
+
+    Only docs with an edge can change label, so the rounds run over the
+    edge endpoints alone and singletons are joined back once at the end.
+    The symmetric edge list is checkpointed once, so ``edges`` (typically a
+    lazy pair pipeline) is evaluated exactly once. Round 1 is one aggregate
+    over it (every label is still its doc's own id); each later round is one
+    join + one aggregate + one join back to the previous labels. Every round
+    is checkpointed eagerly (lineage cut), and its count of changed labels
+    is an observed metric of that same checkpoint action, so testing
+    convergence costs no extra job. The result is checkpointed too: callers
+    get materialized components whose plan is a single scan.
 
     ``edges``: (doc_a, doc_b) pairs. ``ids``: one row per doc (singletons
-    come out as their own component). Returns (doc, cluster_id).
+    come out as their own component). Every edge endpoint must appear in
+    ``ids`` — pairs built from ``ids`` always do. An endpoint missing from
+    ``ids`` still links its neighbors into one component, but gets no
+    output row of its own; its id can still be a component's
+    ``cluster_id``. Returns (doc, cluster_id), one row per ``ids`` row.
     """
     sym = (
-        edges.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
-        .unionByName(edges.select(F.col("doc_b").alias("src"), F.col("doc_a").alias("dst")))
-        .persist()
-    )
-    labels = ids.select(F.col(id_col).alias("doc"), F.col(id_col).alias("label")).localCheckpoint()
-    prev_sum = labels.agg(F.sum("label")).collect()[0][0]
-    for _ in range(max_iterations):
-        msgs = (
-            sym.join(labels, sym["src"] == labels["doc"])
-            .groupBy(F.col("dst").alias("doc2"))
-            .agg(F.min("label").alias("nbr_min"))
+        edges.select(
+            F.explode(
+                F.array(
+                    F.struct(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")),
+                    F.struct(F.col("doc_b").alias("src"), F.col("doc_a").alias("dst")),
+                )
+            ).alias("e")
         )
-        new_labels = (
-            labels.join(msgs, labels["doc"] == msgs["doc2"], "left")
-            .select(
-                "doc",
-                F.least(F.col("label"), F.coalesce(F.col("nbr_min"), F.col("label"))).alias("label"),
-            )
-            # localCheckpoint (eager), not persist: each generation
-            # references the previous one TWICE (message source + join
-            # base), so without lineage truncation the logical plan
-            # doubles per round — the same exponential-analysis trap
-            # fixed in graph.py's pagerank/bfs loops. Checkpointing also
-            # collapses the query's static plan (the Exchange-ledger
-            # entry for llm_dedup_clusters was 394 plan-string hits of
-            # repeated subtrees before this).
+        .select("e.src", "e.dst")
+        .localCheckpoint()
+    )
+    # Each round's candidates: (doc, prev label, min neighbor label).
+    step = sym.groupBy("src").agg(F.min("dst").alias("nbr_min")).select(
+        F.col("src").alias("doc"), F.col("src").alias("prev"), "nbr_min"
+    )
+    for _ in range(max_iterations):
+        changed = Observation()
+        labels = (
+            step.select("doc", "prev", F.least("prev", "nbr_min").alias("label"))
+            .observe(changed, F.count(F.when(F.col("label") < F.col("prev"), 1)).alias("n"))
+            .select("doc", "label")
+            # localCheckpoint (eager), not persist: each generation is
+            # referenced twice by the next (message source + join base),
+            # so without lineage truncation the logical plan doubles per
+            # round — the same exponential-analysis trap fixed in
+            # graph.py's pagerank/bfs loops.
             .localCheckpoint()
         )
-        new_sum = new_labels.agg(F.sum("label")).collect()[0][0]
-        labels = new_labels
-        if new_sum == prev_sum:
+        if changed.get["n"] == 0:
             break
-        prev_sum = new_sum
+        msgs = (
+            sym.join(labels, sym["src"] == labels["doc"])
+            .groupBy(F.col("dst").alias("doc"))
+            .agg(F.min("label").alias("nbr_min"))
+        )
+        step = msgs.join(labels.withColumnRenamed("label", "prev"), "doc")
     else:
-        # The label sum was still falling after max_iterations: the graph's
+        # Labels were still changing after max_iterations: the graph's
         # diameter exceeds the round budget (plausible for long boilerplate
         # near-dup chains at corpus scale). Returning the partial labels
         # would silently split one component into several "clusters" — and
         # dedup would then keep one doc per FRAGMENT. Fail loudly instead.
-        sym.unpersist()
-        labels.unpersist()
         raise RuntimeError(
             f"connected_components did not converge within {max_iterations} "
-            "iterations (label sum still decreasing); raise max_iterations "
-            "— rounds needed equal the component graph's diameter"
+            "iterations (labels still changing); raise max_iterations "
+            "— rounds needed are at most the component graph's diameter + 1"
         )
-    sym.unpersist()
-    return labels.select("doc", F.col("label").alias("cluster_id"))
+    docs = ids.select(F.col(id_col).alias("doc"))
+    return (
+        docs.join(labels, "doc", "left")
+        .select("doc", F.coalesce("label", "doc").alias("cluster_id"))
+        .localCheckpoint()
+    )
 
 
 def simhash(df: DataFrame, id_col: str, text_col: str) -> DataFrame:

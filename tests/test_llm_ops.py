@@ -214,6 +214,83 @@ def test_connected_components_raises_on_non_convergence(spark):
         dedup.connected_components(edges, ids, "doc_id", max_iterations=2)
 
 
+def _union_find_components(edge_list, ids):
+    """Pure-Python reference: doc -> min id of its component."""
+    parent = {i: i for i in ids}
+
+    def find(x):
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in edge_list:
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    return {i: find(i) for i in ids}
+
+
+def _random_pair_graph(seed):
+    """Chains longer than 2, cliques, random cross links, duplicated and
+    reversed edges, and singletons over non-contiguous ids."""
+    import random
+
+    rng = random.Random(seed)
+    ids = rng.sample(range(1, 100_000), 80)
+    pool = ids[:]
+    rng.shuffle(pool)
+    edge_list = []
+    for length in (3, 5, 7):
+        chain, pool = pool[:length], pool[length:]
+        edge_list += list(zip(chain, chain[1:]))
+    for size in (3, 4):
+        clique, pool = pool[:size], pool[size:]
+        edge_list += [(a, b) for i, a in enumerate(clique) for b in clique[i + 1:]]
+    linked = ids[: len(ids) // 2]
+    edge_list += [tuple(rng.sample(linked, 2)) for _ in range(8)]
+    edge_list += rng.sample(edge_list, 5)
+    edge_list += [(b, a) for a, b in rng.sample(edge_list, 5)]
+    return edge_list, ids
+
+
+@pytest.mark.parametrize("seed", [1, 2, 3])
+def test_connected_components_matches_union_find(spark, seed):
+    edge_list, ids = _random_pair_graph(seed)
+    edges = spark.createDataFrame(edge_list, "doc_a long, doc_b long")
+    ids_df = spark.createDataFrame([(i,) for i in ids], "doc_id long")
+    got = [tuple(r) for r in dedup.connected_components(edges, ids_df, "doc_id").collect()]
+    assert len(got) == len(ids)
+    assert dict(got) == _union_find_components(edge_list, ids)
+
+
+def test_connected_components_evaluates_edges_once(spark):
+    """The edge input is usually a lazy pair pipeline; the operator must
+    run it once, not once per use of the symmetric edge list."""
+    calls = spark.sparkContext.accumulator(0)
+
+    def counted(b):
+        calls.add(1)
+        return b
+
+    edge_list = [(1, 2), (2, 3), (3, 4), (10, 11)]
+    raw = spark.createDataFrame(edge_list, "doc_a long, doc_b long")
+    edges = raw.select("doc_a", F.udf(counted, "long")("doc_b").alias("doc_b"))
+    ids = spark.createDataFrame([(i,) for i in [1, 2, 3, 4, 10, 11, 20]], "doc_id long")
+    dedup.connected_components(edges, ids, "doc_id").collect()
+    assert calls.value == len(edge_list)
+
+
+def test_connected_components_endpoint_missing_from_ids(spark):
+    """Documented behaviour outside the input contract: an endpoint absent
+    from ``ids`` still links its neighbors and can name their component,
+    but gets no output row."""
+    edges = spark.createDataFrame([(1, 99), (99, 5), (50, 60)], "doc_a long, doc_b long")
+    ids = spark.createDataFrame([(i,) for i in [1, 5, 7, 60]], "doc_id long")
+    got = {r.doc: r.cluster_id for r in dedup.connected_components(edges, ids, "doc_id").collect()}
+    assert got == {1: 1, 5: 1, 7: 7, 60: 50}
+
+
 def test_multimodal_resize_and_frame_sample(docs):
     with_media = multimodal.attach_blob(docs.limit(20), "doc_id", "text")
     resized = multimodal.fake_resize(with_media, "doc_id", width=8, height=8).collect()

@@ -206,10 +206,10 @@ EXCHANGE_BUDGET = {
     "llm_chunk_documents": 0,
     "llm_contamination_overlap": 7,  # r12: + small-scan fan-out exchange(s)
     "llm_curated_corpus": 2,
-    # the CC loop materializes per-round via localCheckpoint during
-    # construction, so the FINAL plan is leaf scans + the keeper join
-    # (394 before the lineage cut collapsed the repeated subtrees).
-    "llm_dedup_clusters": 4,
+    # CC runs at build: its rounds and the singleton re-attach are
+    # localCheckpointed, so the final plan is one scan of the checkpointed
+    # components plus the map-only keeper flag.
+    "llm_dedup_clusters": 0,
     "llm_dedup_corpus_segments": 7,  # r12: + small-scan fan-out exchange(s)
     "llm_dedup_embedding_cosine": 3,  # r12: + small-scan fan-out exchange(s)
     "llm_dedup_embedding_cosine_fast": 1,
